@@ -56,36 +56,38 @@ def entry(spark: SparkSession) -> DataFrame:
 # Every window entry is green on the local strict DuckDB compare,
 # re-run in window order as a final pre-flight.
 _PRIORITY = [
-    # Round-15 window. (a) the queries this optimization round
-    # lineage-touched (riskiest first: generator rewrite, DSIR
-    # collapse/prep reshape, the JSON-state streaming family):
-    "doc_infinigram_counts", "stream_dsir_ingest",
-    "stream_unimax_ingest", "stream_elo_train",
-    "stream_classifier_train", "stream_kmv_union",
-    "stream_drift_gate", "stream_mixture_monitor",
-    "stream_curated_ingest", "stream_url_ingest",
-    "stream_robots_ingest", "stream_neardup_ingest",
-    # (b) the r14 VERDICT item-8 cohort: round-14-optimized queries
-    # the driver's rotating hash has not yet confirmed (the builder's
-    # strict sf0.01+sf0.1 compares already have):
-    "doc_setsim_join", "doc_containment_join", "doc_bigram_lm",
-    "doc_perplexity_buckets", "ivf_ann", "ivf_incremental",
-    "ivfpq_ann", "ivfpq_ann_recall", "ivfpq_incremental",
-    "pq_ann", "opq_alloc_recall", "q_price_volume_mix",
-    "q_market_basket", "pipeline_curation_report",
-    "multimodal_paired_dedup", "doc_unimax_cap",
-    "doc_lang_temperature_mix", "events_attribution_linear",
-    "doc_decontaminate", "doc_ngram_crossdup",
-    "events_kmv_set_algebra", "doc_bm25_topk", "doc_hybrid_rrf",
-    # (c) remaining r14-batch members + this round's re-probed
-    # suspects, so their quiet driver medians land on record:
-    "doc_retrieval_eval", "doc_pack_efficiency",
-    "doc_infinigram_backoff", "doc_gopher_repetition",
-    "doc_classifier_auc", "doc_classifier_select",
-    "embedding_rp_recall", "doc_bpe_bytelevel", "doc_bpe_encode",
-    "doc_bpe_train", "doc_classifier_calibration",
-    "doc_quality_classifier", "events_bootstrap_ci",
-    "lineitem_analyze_stats", "doc_kn_heldout_lm",
+    # (a) the queries whose code this round touched: the eleven
+    # foreachBatch stream queries moved onto the shared micro-batch
+    # harness, and doc_classifier_score (weights now a JSON KV file)
+    "stream_dsir_ingest", "stream_unimax_ingest",
+    "stream_classifier_train", "stream_drift_gate",
+    "stream_mixture_monitor", "stream_curated_ingest",
+    "stream_url_ingest", "stream_neardup_ingest",
+    "stream_robots_ingest", "stream_elo_train", "stream_kmv_union",
+    "doc_classifier_score",
+    # (b) the stalest rows: the first 38 of the 47 queries that
+    # rotated out of the previous window (neardup_quality_keeper,
+    # q02, q11, q_customer_running_total, q_price_quantiles,
+    # q_region_revenue_share, q_skyline_parts and q_zorder_profile
+    # lead the next rotation)
+    "ancillary_wind_join", "curated_table_maintain",
+    "doc_bpe_artifact_encode", "doc_crossdup_exact",
+    "doc_decontam_sa_probe", "doc_infinigram_sa_backoff",
+    "doc_infinigram_sa_continuation", "doc_infinigram_sa_counts",
+    "doc_infinigram_sa_lm", "doc_longest_dup_span",
+    "doc_mixture_reweight", "doc_normalize_profile",
+    "doc_shard_assignment", "doc_source_boilerplate",
+    "doc_source_cap", "doc_source_crossdup_matrix",
+    "doc_source_ks_test", "doc_source_mannwhitney",
+    "doc_token_budget_select", "doc_tokenizer_compare",
+    "doc_tokenizer_fertility", "doc_unigram_ppl_buckets",
+    "doc_winnow_neardup", "doc_winnowing",
+    "documents_jsonl_roundtrip", "embedding_binary_quant_recall",
+    "embedding_cosine_neardup", "embedding_drift_monitor",
+    "embedding_pca_incremental", "embedding_sq8_recall",
+    "events_cramers_v", "events_interval_overlap", "exact_dedup",
+    "gmf_eval_family", "lineitem_dq_gate", "minhash_cross_snapshot",
+    "minhash_incremental", "multimodal_phash",
 ]
 
 

@@ -55,18 +55,17 @@ def test_train_learns_the_label_gate(spark):
 
 
 def test_weights_artifact_roundtrip_bitexact(spark, tmp_path):
+    from xsarsea_spark.engine import load_kv_json, save_kv_json
     from xsarsea_spark.pipeline.classifier import (doc_features,
-                                                   load_weights,
-                                                   save_weights,
                                                    train_logreg)
 
     docs = spark.read.parquet(f"{SF_DIR_SMALL}/documents.parquet")
     w = train_logreg(doc_features(docs), rounds=3)
     path = str(tmp_path / "clf_weights")
-    save_weights(spark, w, path)
-    # parquet doubles round-trip bit-exactly: the loaded model IS
-    # the trained model
-    assert load_weights(spark, path) == w
+    save_kv_json(spark, w, path)
+    # JSON floats round-trip bit-exactly: the loaded model IS the
+    # trained model
+    assert load_kv_json(spark, path) == w
 
 
 def test_auc_matches_bruteforce_pairwise(spark):
@@ -126,26 +125,24 @@ def test_sgd_step_replay_is_idempotent(spark, tmp_path):
     # The rebuild must read the version STRICTLY BELOW the batch id
     # (v{N-1}) even though its own v{N} now exists — replaying twice
     # yields bit-identical weights, never compounding.
-    import os
-
+    from xsarsea_spark.engine import load_kv_json, save_kv_json
     from xsarsea_spark.pipeline.classifier import (N_FEATURES,
                                                    doc_features,
-                                                   gd_step,
-                                                   load_weights,
-                                                   save_weights)
+                                                   gd_step)
+    from xsarsea_spark.streaming.microbatch import (latest_state,
+                                                    version_path)
 
+    state = str(tmp_path / "state")
     docs = spark.read.parquet(f"{SF_DIR_SMALL}/documents.parquet")
     xy0 = doc_features(docs.filter("doc_id % 3 = 0"))
     xy1 = doc_features(docs.filter("doc_id % 3 = 1"))
-    save_weights(spark, gd_step(xy0, [0.0] * N_FEATURES),
-                 str(tmp_path / "v0"))
+    save_kv_json(spark, gd_step(xy0, [0.0] * N_FEATURES),
+                 version_path(state, 0))
 
     def replay_batch_1():
-        vers = sorted(int(v[1:]) for v in os.listdir(tmp_path))
-        prev = [v for v in vers if v < 1]
-        w = load_weights(spark, str(tmp_path / f"v{prev[-1]}"))
+        w = load_kv_json(spark, latest_state(spark, state, below=1))
         w2 = gd_step(xy1, w)
-        save_weights(spark, w2, str(tmp_path / "v1"))
+        save_kv_json(spark, w2, version_path(state, 1))
         return w2
 
     first = replay_batch_1()

@@ -92,27 +92,25 @@ def test_stream_absorb_versioning_is_replay_safe(spark, tmp_path):
     of a batch (same batch_id re-delivered) must rebuild the SAME
     version — never double-count by merging onto its own output — and
     the final version must equal the one-shot state bit-for-bit."""
-    import os
-
-    from xsarsea_spark.pipeline.incpca import moment_merge, moment_state
+    from xsarsea_spark.engine import load_kv_json, save_kv_json
+    from xsarsea_spark.pipeline.incpca import moment_state
+    from xsarsea_spark.streaming.microbatch import (latest_state,
+                                                    version_path)
 
     emb = spark.read.parquet(f"{SF_DIR_SMALL}/embeddings.parquet")
     state_dir = str(tmp_path / "state")
 
     def absorb(df, batch_id):
-        part = moment_state(df, d=64)
-        vers = ([int(v[1:]) for v in os.listdir(state_dir)]
-                if os.path.isdir(state_dir) else [])
-        prev = [v for v in sorted(vers) if v < batch_id]
+        part = {(r["i"], r["j"]): (r["q"], r["r"], r["n"])
+                for r in moment_state(df, d=64).collect()}
+        prev = latest_state(spark, state_dir, below=batch_id)
         if prev:
-            cur = moment_merge([
-                spark.read.parquet(
-                    os.path.join(state_dir, f"v{prev[-1]}")),
-                part])
-        else:
-            cur = part
-        cur.repartition(1).write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"v{batch_id}"))
+            for i, j, q, r, n in load_kv_json(spark, prev):
+                o = part.get((i, j), (0, 0, 0))
+                part[(i, j)] = (o[0] + q, o[1] + r, o[2] + n)
+        save_kv_json(spark, [(i, j, q, r, n) for (i, j), (q, r, n)
+                             in sorted(part.items())],
+                     version_path(state_dir, batch_id))
 
     b0 = emb.filter("vec_id % 2 = 0")
     b1 = emb.filter("vec_id % 2 = 1")
@@ -120,7 +118,9 @@ def test_stream_absorb_versioning_is_replay_safe(spark, tmp_path):
     absorb(b1, 1)
     absorb(b1, 1)    # crash-replay of batch 1: must be a no-op rebuild
 
-    final = spark.read.parquet(os.path.join(state_dir, "v1"))
+    final = spark.createDataFrame(
+        load_kv_json(spark, version_path(state_dir, 1)),
+        "i int, j int, q long, r long, n long")
     oneshot = moment_state(emb, d=64)
     assert _state_rows(final) == _state_rows(oneshot)
 

@@ -111,11 +111,10 @@ def scratch_path(spark: SparkSession, name: str, key: str) -> str:
     (``pipeline/ingest.py``: file inventories, sync markers) and the
     versioned KB-state helpers below go through the Hadoop FS API and
     accept DFS URIs (``hdfs://``, ``s3a://``) — tested with a
-    ``file://`` URI root. The SUITE's arrival staging (the bench's
-    simulation of file arrivals: ``shutil.copy`` into watch dirs,
-    ``rmtree`` cleanup) is test scaffolding and still assumes a local
-    root; on a cluster, point the root at a shared mount or a DFS URI
-    for the operator state and keep the simulated spool local.
+    ``file://`` URI root — as does the stream harness
+    (``streaming/microbatch.py``: arrival staging and moves, versioned
+    state). The suite queries still clear their leaf with a local
+    ``shutil.rmtree`` before each run.
     ``key`` (usually the dataset directory) is hashed into the leaf so
     runs against different datasets never collide even under the
     default shared root.
@@ -151,7 +150,8 @@ def fs_write_text(spark: SparkSession, path: str, text: str) -> None:
     """Write ``text`` to one file through the Hadoop FS API (local
     paths AND DFS URIs). Crash-safe: write to ``path.tmp`` then
     rename over ``path`` — a crash leaves either the old file or no
-    file, never a torn one."""
+    file, never a torn one. Whatever is at ``path`` is replaced,
+    including a directory an older (parquet) writer left there."""
     fs, hpath = _hadoop_fs(spark, path)
     tmp = spark._jvm.org.apache.hadoop.fs.Path(path + ".tmp")
     out = fs.create(tmp, True)
@@ -160,7 +160,7 @@ def fs_write_text(spark: SparkSession, path: str, text: str) -> None:
     finally:
         out.close()
     if fs.exists(hpath):
-        fs.delete(hpath, False)
+        fs.delete(hpath, True)
     fs.rename(tmp, hpath)
 
 
@@ -192,16 +192,20 @@ def save_kv_json(spark: SparkSession, pairs: list,
     works on a DFS.
 
     Exactness: ``json`` emits shortest-round-trip reprs, so float64
-    values reload bit-identically (the same guarantee the parquet
-    round-trip gave). Crash-safe versioning via :func:`fs_write_text`
-    (tmp+rename) — the versioned-state replay contract rebuilds a
-    missing version from the one strictly below.
+    values reload bit-identically. Crash-safe versioning via
+    :func:`fs_write_text` (tmp+rename) — the versioned-state replay
+    contract (``streaming/microbatch.py``) rebuilds a missing version
+    from the one strictly below.
 
-    Why not a tiny parquet: each ``createDataFrame -> repartition(1)
-    -> write`` round is a full Spark job (plan + schedule + commit
-    protocol, ~0.3-0.5 s of fixed driver work); a streaming trainer
-    pays it once per micro-batch for a KB of state. The bytes land on
-    the same (DFS-capable) storage either way.
+    The state rule: JSON for KB-sized state the driver reads back into
+    Python; parquet for artifacts Spark joins against. A tiny parquet
+    write (``createDataFrame -> repartition(1) -> write``) is a full
+    Spark job (plan + schedule + commit protocol, ~0.3-0.5 s of fixed
+    driver work) that a streaming trainer would pay per micro-batch.
+    The KMV sketch state (``stream_kmv_union``) is the parquet case:
+    ``kmv_merge`` joins it as a DataFrame, and a JSON round trip
+    through the driver measured ~1 s slower per query on a 4-core
+    host.
     """
     import json as _json
 

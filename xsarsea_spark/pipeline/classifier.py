@@ -33,13 +33,12 @@ k-means (`clustering.py`), PCA (`linalg.py`, `incpca.py`) and BPE
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["doc_features", "gd_step", "train_logreg",
-           "train_logreg_grouped", "score_docs", "save_weights",
-           "load_weights", "GROUPED_Z_SQL", "N_FEATURES",
-           "LABEL_MIN_CHARS"]
+           "train_logreg_grouped", "score_docs", "GROUPED_Z_SQL",
+           "N_FEATURES", "LABEL_MIN_CHARS"]
 
 N_FEATURES = 5
 LABEL_MIN_CHARS = 300
@@ -217,26 +216,6 @@ def train_logreg_grouped(xy: DataFrame, group_col: str = "lang",
         return w
     finally:
         txy.unpersist()
-
-
-def save_weights(spark: SparkSession, w: list[float],
-                 path: str) -> None:
-    """Persist the trained weight vector as a parquet artifact —
-    parquet doubles round-trip bit-exactly, so the loaded model
-    scores identically to the in-memory one. repartition(1), never
-    coalesce(1): coalesce of a local-relation frame stalls ~6 s in
-    task scheduling on this Spark build."""
-    spark.createDataFrame(
-        [(d + 1, w[d]) for d in range(len(w))],
-        "feature bigint, weight double",
-    ).repartition(1).write.mode("overwrite").parquet(path)
-
-
-def load_weights(spark: SparkSession, path: str) -> list[float]:
-    """Reload a :func:`save_weights` artifact (bounded: one row per
-    feature dimension)."""
-    rows = spark.read.parquet(path).orderBy("feature").collect()
-    return [r["weight"] for r in rows]
 
 
 def score_docs(xy: DataFrame, w: list[float], qk: int = 12,

@@ -130,14 +130,10 @@ def ingest_curated_batch(
                    n_files=n_files, mode="append")
     # incremental sidecar update: OR the APPENDED digests' words into
     # the persisted filter — O(batch) work on the happy path.
-    # Merged driver-side (O(m_bits/63) rows, ~2k). The sidecar is a
-    # JSON KV file via the Hadoop FS helpers (round 15): a
-    # per-micro-batch createDataFrame->repartition(1)->parquet write
-    # plus a read-back was ~0.5+0.3 s of fixed Spark-job cost per
-    # batch for KB of state; the JSON write is a driver-side
-    # tmp+rename (crash-safer, too: the old parquet overwrite had a
-    # delete-then-write window, rename is single-step) and the read
-    # side rebuilds the same (word, bits) frame via createDataFrame.
+    # Merged driver-side (O(m_bits/63) rows, ~2k); the sidecar is
+    # KB-sized driver state, so it is a JSON KV file (save_kv_json),
+    # and the read side rebuilds the same (word, bits) frame via
+    # createDataFrame.
     #
     # DEMOTED path exception: a stale-or-missing sidecar may have
     # holes for digests appended during the crash window, and writing

@@ -17,6 +17,11 @@ from xsarsea_spark.engine import materialize, scratch_path
 from xsarsea_spark.pipeline.clustering import KM_SCALE
 from xsarsea_spark.pipeline.dedup import MINHASH_P, _BAND_MULT, _perm_params
 from xsarsea_spark.sources.tables import load
+from xsarsea_spark.streaming.microbatch import (latest_state,
+                                               replay_arrivals,
+                                               replay_table,
+                                               state_versions,
+                                               version_path)
 from xsarsea_spark.suite.base import QTRUNC, spec
 
 # DuckDB spelling of pipeline.text.HASH40_SQL (same value)
@@ -2807,7 +2812,6 @@ def q_stream_dsir_ingest(spark: SparkSession,
     table_dir = os.path.join(base, "table")
     bloom_path = os.path.join(base, "bloom.parquet")
     marker_path = os.path.join(base, "bloom_sync.txt")
-    ckpt_dir = os.path.join(base, "ckpt")
 
     docs_b = spark.read.parquet(f"{sf_dir}/documents.parquet")
     bad = _DQB_BAD.format(nt="size(split(text, ' '))")
@@ -2849,8 +2853,6 @@ def q_stream_dsir_ingest(spark: SparkSession,
     dsir_threshold(hsc).repartition(1) \
         .write.mode("overwrite").parquet(thr_path)
 
-    schema = docs_b.schema
-
     def dsir_prep(df: DataFrame) -> DataFrame:
         t = spark.read.parquet(terms_path)
         thr = spark.read.parquet(thr_path)
@@ -2881,18 +2883,7 @@ def q_stream_dsir_ingest(spark: SparkSession,
             zbits=_CUR_BITS, m_bits=_ING_BLOOM_BITS,
             k=_ING_BLOOM_K, prep=dsir_prep)
 
-    def run_stream() -> None:
-        src = (spark.readStream.schema(schema)
-               .option("pathGlobFilter", "documents.parquet")
-               .parquet(sf_dir))
-        q = (src.writeStream.foreachBatch(ingest)
-             .option("checkpointLocation", ckpt_dir)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-
-    run_stream()
-    run_stream()    # second run: zero new files -> no-op
+    replay_table(spark, sf_dir, "documents", base, ingest)
 
     back = spark.read.parquet(table_dir)
     return back.groupBy("source").agg(
@@ -2999,7 +2990,6 @@ def q_stream_unimax_ingest(spark: SparkSession,
     table_dir = os.path.join(base, "table")
     bloom_path = os.path.join(base, "bloom.parquet")
     marker_path = os.path.join(base, "bloom_sync.txt")
-    ckpt_dir = os.path.join(base, "ckpt")
 
     docs_b = spark.read.parquet(f"{sf_dir}/documents.parquet")
     cuts = docs_b.agg(
@@ -3019,25 +3009,17 @@ def q_stream_unimax_ingest(spark: SparkSession,
              .alias("lang_cap")) \
         .repartition(1).write.mode("overwrite").parquet(caps_path)
 
-    schema = docs_b.schema
-
-    from xsarsea_spark.engine import (fs_list_names, load_kv_json,
-                                      save_kv_json)
+    from xsarsea_spark.engine import load_kv_json, save_kv_json
 
     def _consumed_before(batch_id: int):
-        # per-batch consumed counters as JSON KV files (round 15):
-        # the read-parquet + agg per batch was a Spark job for an
-        # L-row table; summing driver-side is the same exact BIGINT
-        # addition, and a retried batch still overwrites its OWN file
-        parts = [d for d in fs_list_names(spark, counters_dir)
-                 if d.startswith("batch=") and not d.endswith(".tmp")
-                 and int(d.split("=", 1)[1]) < batch_id]
+        # every earlier batch's counters, summed driver-side (exact
+        # BIGINT addition); a retried batch overwrites its OWN version
+        parts = state_versions(spark, counters_dir, below=batch_id)
         if not parts:
             return None
         tot: dict[str, int] = {}
-        for d in sorted(parts):
-            for lang, used in load_kv_json(
-                    spark, os.path.join(counters_dir, d)):
+        for path in parts:
+            for lang, used in load_kv_json(spark, path):
                 tot[lang] = tot.get(lang, 0) + int(used)
         return spark.createDataFrame(
             sorted(tot.items()), "lang string, used bigint")
@@ -3073,20 +3055,9 @@ def q_stream_unimax_ingest(spark: SparkSession,
                    for r in enforced.groupBy("lang").agg(
                        F.expr("CAST(SUM(n_tokens) AS BIGINT)")
                        .alias("used")).collect()),
-            os.path.join(counters_dir, f"batch={batch_id}"))
+            version_path(counters_dir, batch_id))
 
-    def run_stream() -> None:
-        src = (spark.readStream.schema(schema)
-               .option("pathGlobFilter", "documents.parquet")
-               .parquet(sf_dir))
-        q = (src.writeStream.foreachBatch(ingest)
-             .option("checkpointLocation", ckpt_dir)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-
-    run_stream()
-    run_stream()    # second run: zero new files -> no-op
+    replay_table(spark, sf_dir, "documents", base, ingest)
 
     back = spark.read.parquet(table_dir)
     return back.groupBy("lang").agg(
@@ -4932,12 +4903,12 @@ def q_doc_quality_classifier(spark: SparkSession,
 
 # ----------------------------------------------------------------------
 # Classifier deploy half: train on the historical slice (doc_id%4!=0),
-# persist the weight vector to a parquet artifact, reload it, and
+# persist the weight vector as a JSON KV file, reload it, and
 # score the incoming batch (doc_id%4=0) in ONE O(batch) scan — no
 # training jobs in the batch path, the production train-once/
-# score-everywhere lifecycle (BPE artifact precedent). Parquet
-# doubles round-trip bit-exactly, so the oracle's full train+score
-# replay can only match if the saved artifact IS the model.
+# score-everywhere lifecycle (BPE artifact precedent). JSON floats
+# round-trip bit-exactly, so the oracle's full train+score replay
+# can only match if the saved artifact IS the model.
 # ----------------------------------------------------------------------
 
 _CLF_TRAIN_WHERE = "doc_id % 4 != 0"
@@ -4965,8 +4936,9 @@ FROM sb""")
     "doc_classifier_score",
     _clf_score_oracle(),
     description="Classifier artifact round trip: train on the "
-                "historical slice -> persist weights to parquet -> "
-                "reload -> score the new batch in one O(batch) scan "
+                "historical slice -> persist weights as a JSON KV "
+                "file -> reload -> score the new batch in one "
+                "O(batch) scan "
                 "(no training jobs in the batch path) — scores, "
                 "probabilities and keep decisions value-identical to "
                 "the oracle's full train+score replay",
@@ -4974,11 +4946,8 @@ FROM sb""")
 )
 def q_doc_classifier_score(spark: SparkSession,
                            sf_dir: str) -> DataFrame:
-    import hashlib
-
+    from xsarsea_spark.engine import load_kv_json, save_kv_json
     from xsarsea_spark.pipeline.classifier import (doc_features,
-                                                   load_weights,
-                                                   save_weights,
                                                    score_docs,
                                                    train_logreg)
 
@@ -4988,9 +4957,9 @@ def q_doc_classifier_score(spark: SparkSession,
                      rounds=_LOGREG_ROUNDS, lr=_LOGREG_LR,
                      qk=_LOGREG_QK, scale=_LOGREG_SCALE)
     path = scratch_path(spark, "clf_weights", sf_dir)
-    save_weights(spark, w, path)
+    save_kv_json(spark, w, path)
     return score_docs(xy.filter(_CLF_BATCH_WHERE),
-                      load_weights(spark, path), qk=_LOGREG_QK)
+                      load_kv_json(spark, path), qk=_LOGREG_QK)
 
 
 # ----------------------------------------------------------------------
@@ -5414,12 +5383,10 @@ FROM w{rf}, acc, (SELECT unnest(range(1, {nf + 1})) AS i)""")
 )
 def q_stream_classifier_train(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
-    import hashlib
     import os
     import shutil
 
-    from xsarsea_spark.engine import (fs_list_names, load_kv_json,
-                                      save_kv_json)
+    from xsarsea_spark.engine import load_kv_json, save_kv_json
     from xsarsea_spark.pipeline.classifier import (N_FEATURES,
                                                    doc_features,
                                                    gd_step,
@@ -5427,64 +5394,20 @@ def q_stream_classifier_train(spark: SparkSession,
 
     base = scratch_path(spark, "stream_clf", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
-    watch = os.path.join(base, "incoming")
     state = os.path.join(base, "state")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(watch)
-
     docs = load(spark, sf_dir, "documents")
-    # stage the arrival slices OUTSIDE the watched directory — ONE
-    # corpus pass via partitionBy (round 15): the per-slice
-    # filter+write loop scanned the corpus once per arrival; the
-    # partition column is dropped from the data files, so each
-    # __a={k} directory holds exactly the old arrival_{k} rows
-    (docs.withColumn("__a", F.expr(f"doc_id % {_SGD_ARRIVALS}"))
-     .repartition(_SGD_ARRIVALS, "__a")
-     .write.partitionBy("__a")
-     .parquet(os.path.join(base, "arrivals")))
-    schema = spark.read.parquet(
-        f"{sf_dir}/documents.parquet").schema
 
     def step(df: DataFrame, batch_id: int) -> None:
-        # versioned KB-sized weight state via the Hadoop-FS JSON
-        # helper (round 15): the tiny-parquet save/load per
-        # micro-batch was a full Spark job each way (~0.5 s fixed);
-        # same persisted-state semantics (exact float round-trip,
-        # crash-safe rename, DFS-capable)
-        vers = sorted(int(v[1:]) for v in fs_list_names(spark, state)
-                      if not v.endswith(".tmp"))
-        prev = [v for v in vers if v < batch_id]
-        w = (list(load_kv_json(
-            spark, os.path.join(state, f"v{prev[-1]}")))
-            if prev else [0.0] * N_FEATURES)
+        prev = latest_state(spark, state, below=batch_id)
+        w = (list(load_kv_json(spark, prev)) if prev
+             else [0.0] * N_FEATURES)
         w2 = gd_step(doc_features(df), w, lr=_LOGREG_LR,
                      qk=_LOGREG_QK, scale=_LOGREG_SCALE)
-        save_kv_json(spark, w2, os.path.join(state, f"v{batch_id}"))
+        save_kv_json(spark, w2, version_path(state, batch_id))
 
-    def run_stream() -> None:
-        src = spark.readStream.schema(schema).parquet(watch)
-        q = (src.writeStream.foreachBatch(step)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-
-    for k in range(_SGD_ARRIVALS):
-        adir = os.path.join(base, "arrivals", f"__a={k}")
-        for fn in os.listdir(adir):
-            if fn.endswith(".parquet"):
-                shutil.copy(os.path.join(adir, fn),
-                            os.path.join(watch, f"a{k}_{fn}"))
-        run_stream()
-    run_stream()   # no new files -> no-op (exactly-once)
-
-    vers = sorted(int(v[1:]) for v in fs_list_names(spark, state)
-                  if not v.endswith(".tmp"))
-    if len(vers) != _SGD_ARRIVALS:   # not a bare assert: -O strips it
-        raise RuntimeError(
-            f"expected {_SGD_ARRIVALS} weight versions, got {vers} — "
-            f"an arrival batch was skipped or duplicated")
-    w = list(load_kv_json(spark, os.path.join(state, f"v{vers[-1]}")))
+    replay_arrivals(spark, docs, f"doc_id % {_SGD_ARRIVALS}",
+                    _SGD_ARRIVALS, base, step)
+    w = list(load_kv_json(spark, latest_state(spark, state)))
     acc = (doc_features(docs)
            .select("y", F.expr(z_expr(w)).alias("z"))
            .agg(F.expr("CAST(SUM(CASE WHEN (z >= CAST(0.0 AS"
@@ -6769,12 +6692,10 @@ def q_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("pipeline", "streaming", "similarity", "incremental"),
 )
 def q_stream_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import os
     import shutil
 
-    from xsarsea_spark.engine import (fs_list_names, load_kv_json,
-                                      save_kv_json)
+    from xsarsea_spark.engine import load_kv_json, save_kv_json
     from xsarsea_spark.pipeline.incpca import (drift_report,
                                                moment_state)
 
@@ -6782,36 +6703,26 @@ def q_stream_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(base, ignore_errors=True)
     hist_path = os.path.join(base, "hist")
     state_dir = os.path.join(base, "state")
-    ckpt_dir = os.path.join(base, "ckpt")
 
     emb = load(spark, sf_dir, "embeddings")
     # the baseline a production gate compares against, persisted once
     moment_state(emb.filter("vec_id % 3 < 2"), d=_PCA_D) \
         .repartition(1).write.parquet(hist_path)
 
-    schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
-
     def absorb(df: DataFrame, batch_id: int) -> None:
         # merge onto the latest state version STRICTLY BELOW this
         # batch id: a crash-replay of batch N rebuilds v{N} from
         # v{N-1} + its own rows, never from its own partial output.
-        # State is the bounded (d^2 + d)-row int64 moment table,
-        # persisted as a JSON KV file (round 15): the per-batch
-        # read+moment_merge+write was 3 Spark jobs; the batch's own
-        # moment aggregation is the only job left, and the merge is
-        # the SAME pure int64 addition driver-side (moment_merge's
-        # documented contract).
+        # State is the bounded (d^2 + d)-row int64 moment table; the
+        # merge is the SAME pure int64 addition driver-side
+        # (moment_merge's documented contract).
         part = {(int(r["i"]), int(r["j"])):
                 (int(r["q"]), int(r["r"]), int(r["n"]))
                 for r in moment_state(
                     df.filter("vec_id % 3 = 2"), d=_PCA_D).collect()}
-        vers = sorted(int(v[1:])
-                      for v in fs_list_names(spark, state_dir)
-                      if not v.endswith(".tmp"))
-        prev = [v for v in vers if v < batch_id]
+        prev = latest_state(spark, state_dir, below=batch_id)
         if prev:
-            for (i, j, q, r, n) in load_kv_json(
-                    spark, os.path.join(state_dir, f"v{prev[-1]}")):
+            for (i, j, q, r, n) in load_kv_json(spark, prev):
                 old = part.get((int(i), int(j)), (0, 0, 0))
                 part[(int(i), int(j))] = (old[0] + int(q),
                                           old[1] + int(r),
@@ -6820,27 +6731,14 @@ def q_stream_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark,
             [(i, j, q, r, n)
              for (i, j), (q, r, n) in sorted(part.items())],
-            os.path.join(state_dir, f"v{batch_id}"))
+            version_path(state_dir, batch_id))
 
-    def run_stream() -> None:
-        src = (spark.readStream.schema(schema)
-               .option("pathGlobFilter", "embeddings.parquet")
-               .parquet(sf_dir))
-        q = (src.writeStream.foreachBatch(absorb)
-             .option("checkpointLocation", ckpt_dir)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
+    replay_table(spark, sf_dir, "embeddings", base, absorb)
 
-    run_stream()
-    run_stream()    # second run: zero new files -> no-op (exactly-once)
-
-    vers = sorted(int(v[1:]) for v in fs_list_names(spark, state_dir)
-                  if not v.endswith(".tmp"))
     final = spark.createDataFrame(
         [(int(i), int(j), int(q), int(r), int(n))
          for i, j, q, r, n in load_kv_json(
-             spark, os.path.join(state_dir, f"v{vers[-1]}"))],
+             spark, latest_state(spark, state_dir))],
         "i int, j int, q long, r long, n long")
     return drift_report(spark.read.parquet(hist_path), final)
 
@@ -6905,15 +6803,13 @@ def q_stream_mixture_monitor(spark: SparkSession,
     import os
     import shutil
 
-    from xsarsea_spark.engine import (fs_list_names, load_kv_json,
-                                      save_kv_json)
+    from xsarsea_spark.engine import load_kv_json, save_kv_json
     from xsarsea_spark.suite.base import QTRUNC
 
     base = scratch_path(spark, "stream_mixshare", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
     hist_path = os.path.join(base, "hist")
     state_dir = os.path.join(base, "state")
-    ckpt_dir = os.path.join(base, "ckpt")
 
     def counts(df: DataFrame) -> DataFrame:
         return (df.filter("text IS NOT NULL")
@@ -6924,48 +6820,26 @@ def q_stream_mixture_monitor(spark: SparkSession,
     docs = load(spark, sf_dir, "documents")
     counts(docs.filter("doc_id % 3 < 2"))         .repartition(1).write.parquet(hist_path)
 
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-
     def absorb(df: DataFrame, batch_id: int) -> None:
-        # versioned per-source BIGINT state via the Hadoop-FS JSON
-        # helpers (round 15): the per-batch read+union+agg+write was
-        # 3 Spark jobs for a source-count-sized table; the batch agg
-        # is the only job left, the strictly-below merge is exact
-        # int64 addition driver-side (same NULL-groups-merge
-        # semantics as the old groupBy)
+        # versioned per-source BIGINT state; the strictly-below
+        # merge is exact int64 addition driver-side (a NULL source
+        # is one group, as in a groupBy)
         part = {r["source"]: int(r["n_tokens"])
                 for r in counts(df.filter("doc_id % 3 = 2")).collect()}
-        vers = sorted(int(v[1:])
-                      for v in fs_list_names(spark, state_dir)
-                      if not v.endswith(".tmp"))
-        prev = [v for v in vers if v < batch_id]
+        prev = latest_state(spark, state_dir, below=batch_id)
         if prev:
-            for src, n in load_kv_json(
-                    spark, os.path.join(state_dir, f"v{prev[-1]}")):
+            for src, n in load_kv_json(spark, prev):
                 part[src] = part.get(src, 0) + int(n)
         save_kv_json(spark,
                      sorted(part.items(),
                             key=lambda kv: (kv[0] is None, kv[0])),
-                     os.path.join(state_dir, f"v{batch_id}"))
+                     version_path(state_dir, batch_id))
 
-    def run_stream() -> None:
-        src = (spark.readStream.schema(schema)
-               .option("pathGlobFilter", "documents.parquet")
-               .parquet(sf_dir))
-        q = (src.writeStream.foreachBatch(absorb)
-             .option("checkpointLocation", ckpt_dir)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
+    replay_table(spark, sf_dir, "documents", base, absorb)
 
-    run_stream()
-    run_stream()    # zero new files -> no-op (exactly-once)
-
-    vers = sorted(int(v[1:]) for v in fs_list_names(spark, state_dir)
-                  if not v.endswith(".tmp"))
     batch = spark.createDataFrame(
         [(s, int(n)) for s, n in load_kv_json(
-            spark, os.path.join(state_dir, f"v{vers[-1]}"))],
+            spark, latest_state(spark, state_dir))],
         "source string, n_tokens bigint")
     hist = spark.read.parquet(hist_path)
     s = (hist.selectExpr("source", "n_tokens AS nh")
@@ -8791,7 +8665,6 @@ FROM curated GROUP BY lang
     tags=("pipeline", "streaming", "sink", "layout"),
 )
 def q_stream_curated_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import os
     import shutil
 
@@ -8802,9 +8675,6 @@ def q_stream_curated_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     table_dir = os.path.join(base, "table")
     bloom_path = os.path.join(base, "bloom.parquet")
     marker_path = os.path.join(base, "bloom_sync.txt")
-    ckpt_dir = os.path.join(base, "ckpt")
-
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
 
     def ingest(df: DataFrame, batch_id: int) -> None:
         ingest_curated_batch(
@@ -8812,18 +8682,7 @@ def q_stream_curated_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             min_chars=_CUR_MINCHARS, zcols=["n_chars", "doc_id"],
             zbits=_CUR_BITS, m_bits=_ING_BLOOM_BITS, k=_ING_BLOOM_K)
 
-    def run_stream() -> None:
-        src = (spark.readStream.schema(schema)
-               .option("pathGlobFilter", "documents.parquet")
-               .parquet(sf_dir))
-        q = (src.writeStream.foreachBatch(ingest)
-             .option("checkpointLocation", ckpt_dir)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-
-    run_stream()
-    run_stream()    # second run: zero new files -> no-op (exactly-once)
+    replay_table(spark, sf_dir, "documents", base, ingest)
 
     back = spark.read.parquet(table_dir)
     return back.groupBy("lang").agg(
@@ -8896,9 +8755,6 @@ def q_stream_url_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     table_dir = os.path.join(base, "table")
     bloom_path = os.path.join(base, "bloom.parquet")
     marker_path = os.path.join(base, "bloom_sync.txt")
-    ckpt_dir = os.path.join(base, "ckpt")
-
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
 
     def url_prep(df: DataFrame) -> DataFrame:
         x = df.selectExpr("doc_id", "n_chars",
@@ -8917,18 +8773,7 @@ def q_stream_url_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             zbits=_CUR_BITS, m_bits=_ING_BLOOM_BITS,
             k=_ING_BLOOM_K, prep=url_prep)
 
-    def run_stream() -> None:
-        src = (spark.readStream.schema(schema)
-               .option("pathGlobFilter", "documents.parquet")
-               .parquet(sf_dir))
-        q = (src.writeStream.foreachBatch(ingest)
-             .option("checkpointLocation", ckpt_dir)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-
-    run_stream()
-    run_stream()    # second run: zero new files -> no-op
+    replay_table(spark, sf_dir, "documents", base, ingest)
 
     back = spark.read.parquet(table_dir)
     return back.groupBy("domain").agg(
@@ -8978,7 +8823,6 @@ FROM kept GROUP BY lang
 )
 def q_stream_neardup_ingest(spark: SparkSession,
                             sf_dir: str) -> DataFrame:
-    import hashlib
     import os
     import shutil
 
@@ -8990,9 +8834,6 @@ def q_stream_neardup_ingest(spark: SparkSession,
     seen_dir = os.path.join(base, "seen")
     bands_dir = os.path.join(base, "bands")
     marker_path = os.path.join(base, "bands_sync.txt")
-    ckpt_dir = os.path.join(base, "ckpt")
-
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
 
     def ingest(df: DataFrame, batch_id: int) -> None:
         ingest_neardup_batch(
@@ -9000,18 +8841,7 @@ def q_stream_neardup_ingest(spark: SparkSession,
             seen_dir, bands_dir, marker_path,
             n=_MH_N, k=_MH_K, threshold=_MH_T)
 
-    def run_stream() -> None:
-        src = (spark.readStream.schema(schema)
-               .option("pathGlobFilter", "documents.parquet")
-               .parquet(sf_dir))
-        q = (src.writeStream.foreachBatch(ingest)
-             .option("checkpointLocation", ckpt_dir)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-
-    run_stream()
-    run_stream()    # second run: zero new files -> no-op (exactly-once)
+    replay_table(spark, sf_dir, "documents", base, ingest)
 
     back = spark.read.parquet(seen_dir).filter("accepted")
     return back.groupBy("lang").agg(
@@ -10373,7 +10203,6 @@ def q_stream_robots_ingest(spark: SparkSession,
     table_dir = os.path.join(base, "table")
     bloom_path = os.path.join(base, "bloom.parquet")
     marker_path = os.path.join(base, "bloom_sync.txt")
-    ckpt_dir = os.path.join(base, "ckpt")
 
     # offline artifact: rules compiled once from the historical
     # corpus (domains are source-cardinality; one robots.txt per
@@ -10400,20 +10229,7 @@ def q_stream_robots_ingest(spark: SparkSession,
             zbits=_CUR_BITS, m_bits=_ING_BLOOM_BITS,
             k=_ING_BLOOM_K, prep=robots_prep)
 
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-
-    def run_stream() -> None:
-        src = (spark.readStream.schema(schema)
-               .option("pathGlobFilter", "documents.parquet")
-               .parquet(sf_dir))
-        q = (src.writeStream.foreachBatch(ingest)
-             .option("checkpointLocation", ckpt_dir)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-
-    run_stream()
-    run_stream()    # second run: zero new files -> no-op
+    replay_table(spark, sf_dir, "documents", base, ingest)
 
     back = spark.read.parquet(table_dir)
     return back.groupBy("domain").agg(
